@@ -18,15 +18,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _offset_order(*, desc: bool = False) -> list[Column]:
-    """Total offset order over the simulated binlog: (ts, event_id).
-
-    Analog of BinlogOffset.compareTo (reference
-    flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
-    compare timestamps, then file/pos — here the monotonic event_id.
-    """
-    cols = [F.col("ts"), F.col("event_id")]
-    return [c.desc() for c in cols] if desc else cols
+# Total offset order over the simulated binlog: (ts, event_id).
+# Analog of BinlogOffset.compareTo (reference
+# flink-connector-mysql-cdc/.../source/offset/BinlogOffset.java:173-255):
+# compare timestamps, then file/pos — here the monotonic event_id.
+_OFFSET_COLUMNS = ("ts", "event_id")
 
 
 def changelog_normalize(
@@ -59,9 +55,10 @@ def changelog_normalize(
     # Single-parse form (round 13): this helper fronts a dozen tier-A
     # keys and some builders call it several times per run — the window
     # rank builds as one selectExpr parse instead of ~45 gateway calls.
-    order = "ts DESC, event_id DESC"
+    order_cols = list(_OFFSET_COLUMNS)
     if "schema_epoch" in changelog.columns:
-        order += ", schema_epoch DESC"
+        order_cols.append("schema_epoch")
+    order = ", ".join(f"{c} DESC" for c in order_cols)
     keys = ", ".join(f"`{k}`" for k in key_cols)
     out = (
         changelog.selectExpr(
@@ -502,7 +499,7 @@ def to_retract_stream(
 
     Output: row_kind ('+I','-U','+U','-D'), keys, ``value``, ts, event_id.
     """
-    w = Window.partitionBy(*key_cols).orderBy(*_offset_order())
+    w = Window.partitionBy(*key_cols).orderBy(*_OFFSET_COLUMNS)
     # Window expressions can't nest inside a generator — materialize the
     # reconstructed 'before' first (same shuffle either way).
     changelog = changelog.withColumn(

@@ -572,16 +572,15 @@ def cdc_multi_table_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             table="orders",
         )
     )
-    # cache=True: one changelog, N table consumers — the routed stream is
-    # persisted once instead of re-running the lag window + to_json +
-    # route extraction per table (standard multi-sink fan-out).
+    # one changelog, N table consumers — the routed stream is persisted
+    # once instead of re-running the lag window + to_json + route
+    # extraction per table (standard multi-sink fan-out).
     parsed = parse_debezium_json_multi(
         mixed,
         {
             ("app", "events"): EVENT_PAYLOAD_SCHEMA,
             ("app", "orders"): ORDERS_PAYLOAD_SCHEMA,
         },
-        cache=True,
     )
     ev = parsed[("app", "events")].agg(
         F.count(F.lit(1)).alias("n_rows"),

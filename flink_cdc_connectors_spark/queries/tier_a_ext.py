@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_cdc_connectors_spark.registry import query
+from flink_cdc_connectors_spark.sources.envelope import op_sql
 from flink_cdc_connectors_spark.sources.loaders import load_table
 
 # Cents conversion used everywhere a float would otherwise ride a string
@@ -108,10 +109,7 @@ def _logged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Window operator exactly as the `.over(w)` chain did; values are
     unchanged (the 160-key oracle sweep covers every consumer).
     """
-    app_op = (
-        "CASE WHEN event_type = 'error' THEN 'delete' "
-        "WHEN event_type = 'signup' THEN 'insert' ELSE 'update' END"
-    )
+    app_op = op_sql()
     over = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
     staged = load_table(spark, sf_dir, "events").selectExpr(
         "event_id",

@@ -1,6 +1,5 @@
 from .loaders import load_table, load_tables, register_views  # noqa: F401
 from .envelope import (  # noqa: F401
-    DEBEZIUM_ENVELOPE_SCHEMA,
     EVENT_PAYLOAD_SCHEMA,
     changelog_view,
     events_to_debezium_json,

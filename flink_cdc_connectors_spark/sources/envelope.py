@@ -38,10 +38,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Names interpolated into the single-parse SQL strings (db/table literals,
-# the value column, payload field names) must be inert under the SQL lexer
-# (ADVICE r12 #2 — shared with sources/formats.py, which imports these).
+# Names interpolated into the single-parse SQL strings must be inert under
+# the SQL lexer (ADVICE r12 #2 — shared with sources/formats.py, which
+# imports these). db/table values land inside single-quoted literals, so
+# the looser _SAFE_SQL_NAME suffices; the value column is a bare
+# identifier, where `my-col` would parse as a subtraction and `a.b` as a
+# struct access.
 _SAFE_SQL_NAME = re.compile(r"^[A-Za-z0-9_.$-]+$")
+_SQL_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _safe(name: str, what: str) -> str:
@@ -53,21 +57,37 @@ def _safe(name: str, what: str) -> str:
     return name
 
 
-def _payload_ddl(payload_schema: T.StructType) -> str:
-    """A struct schema as a DDL fragment for from_json SQL strings —
-    parses to the same StructType object the StructType form passed.
-    Field names are backtick-quoted (and asserted backtick-free) so a
-    name that is a SQL keyword still parses as a name."""
-    for f in payload_schema.fields:
-        if "`" in f.name:
-            raise ValueError(f"payload field {f.name!r} cannot carry a backtick")
-    return (
-        "struct<"
-        + ",".join(
-            f"`{f.name}`:{f.dataType.simpleString()}" for f in payload_schema.fields
+def _ident(name: str, what: str) -> str:
+    if not _SQL_IDENT.match(name):
+        raise ValueError(
+            f"{what} {name!r} is interpolated into SQL as a bare identifier "
+            "and must match [A-Za-z_][A-Za-z0-9_]*"
         )
-        + ">"
-    )
+    return name
+
+
+def _payload_ddl(dtype: T.DataType) -> str:
+    """A payload type as a DDL fragment for from_json SQL strings —
+    parses to the same type object the StructType form passed. Struct
+    field names at every depth are backtick-quoted, so a name that is a
+    SQL keyword still parses as a name; the fragment is embedded in a
+    single-quoted literal, so names carrying a backtick, quote or
+    backslash are rejected."""
+    if isinstance(dtype, T.StructType):
+        for f in dtype.fields:
+            if any(c in f.name for c in "`'\\"):
+                raise ValueError(
+                    f"payload field {f.name!r} cannot carry a backtick, "
+                    "quote or backslash"
+                )
+        fields = ",".join(f"`{f.name}`:{_payload_ddl(f.dataType)}" for f in dtype.fields)
+        return f"struct<{fields}>"
+    if isinstance(dtype, T.ArrayType):
+        return f"array<{_payload_ddl(dtype.elementType)}>"
+    if isinstance(dtype, T.MapType):
+        return f"map<{_payload_ddl(dtype.keyType)},{_payload_ddl(dtype.valueType)}>"
+    return dtype.simpleString()
+
 
 # Maps the fixture's event_type to a changelog op. Kept as a plain dict so
 # both the Column expression and oracle SQL are generated from one place.
@@ -121,10 +141,6 @@ def make_envelope_schema(payload_schema: T.StructType) -> T.StructType:
             T.StructField("ts_ms", T.LongType()),
         ]
     )
-
-
-# Envelope instance for the events fixture (back-compat export).
-DEBEZIUM_ENVELOPE_SCHEMA = make_envelope_schema(EVENT_PAYLOAD_SCHEMA)
 
 
 def op_col(event_type: Column | str = "event_type") -> Column:
@@ -205,10 +221,7 @@ def events_to_debezium_json(
     Values and wire bytes unchanged (oracle- and test-pinned).
     """
     db, table = _safe(db, "db"), _safe(table, "table")
-    app_op = (
-        "CASE WHEN event_type = 'error' THEN 'delete' "
-        "WHEN event_type = 'signup' THEN 'insert' ELSE 'update' END"
-    )
+    app_op = op_sql()
     over = "OVER (PARTITION BY user_id ORDER BY ts, event_id)"
     # Materialize lag columns before building the to_json struct (window
     # expressions cannot nest inside generators/struct literals).
@@ -352,94 +365,11 @@ def route_tables(envelope_rows: DataFrame) -> dict[tuple[str, str], DataFrame]:
     }
 
 
-# Payload field types the VARIANT decode engine handles: atomic types
-# whose `try_variant_get` cast is value-identical to the Jackson struct
-# decode (A/B-pinned by tests/test_formats.py). Decimals, timestamps and
-# nested payload types are rejected — their JSON-number/string coercion
-# rules differ between the two decoders in corner cases.
-#
-# MEASURED VERDICT (sf10 = 10M rows, pinned wire, min-of-2): the Jackson
-# ``from_json`` decode of the full envelope runs 4.1-5.1 s; the VARIANT
-# path (one try_parse_json + 13 typed gets + 2 null guards) runs
-# 8.2-9.5 s — per-get traversal cost exceeds one Jackson pass once the
-# extraction is this wide, and Catalyst's OptimizeJsonExprs already
-# prunes the from_json schema to the consumed fields, so narrow
-# consumers get the narrow parse WITHOUT switching decoders. VARIANT
-# only led in a 3-field microbench against an UNPRUNED full-schema
-# from_json (whole-struct select defeats pruning) — a measurement
-# artifact, not a win. Hence engine='auto' resolves to Jackson; the
-# variant engine stays available explicitly, value-identical by the
-# A/B pin, for narrow-extraction experiments.
-_VARIANT_SAFE_TYPES = (
-    T.StringType,
-    T.BooleanType,
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.FloatType,
-    T.DoubleType,
-)
-
-
-def _variant_safe(payload_schema: T.StructType) -> bool:
-    return all(isinstance(f.dataType, _VARIANT_SAFE_TYPES) for f in payload_schema.fields)
-
-
-def _variant_envelope(v: Column, payload_schema: T.StructType) -> Column:
-    """The envelope struct via Spark's VARIANT JSON path: typed
-    ``try_variant_get`` per consumed field over an ALREADY-PARSED variant
-    column — no Jackson re-lexing per field. ``v`` MUST be a materialized
-    variant column (a previous projection's ``try_parse_json`` output),
-    not an inline ``try_parse_json(...)`` expression: the payload gets
-    sit under ``when`` guards, which excludes them from whole-stage
-    subexpression elimination, so an inline parse would re-parse the
-    record once PER GET (a further ~20% on top of the staged form; with
-    the parse in its own projection — which CollapseProject keeps
-    separate because the expression is non-cheap and multiply referenced
-    — the gets are binary traversals). Even staged, this path measured
-    SLOWER than the pruned Jackson decode at every width tried (see
-    _VARIANT_SAFE_TYPES) — it exists as an explicitly-selected engine,
-    not the default.
-    Output is shaped exactly like ``from_json(make_envelope_schema(...))``:
-    a missing or JSON-null ``before``/``after`` is a NULL struct (not a
-    struct of NULLs), so downstream ``isNull`` probes behave identically."""
-
-    def payload(path: str) -> Column:
-        node = F.try_variant_get(v, path, "variant")
-        gets = F.struct(
-            *[
-                F.try_variant_get(
-                    v, f"{path}.{f.name}", f.dataType.simpleString()
-                ).alias(f.name)
-                for f in payload_schema.fields
-            ]
-        )
-        return F.when(node.isNotNull() & ~F.is_variant_null(node), gets)
-
-    source = F.struct(
-        *[
-            F.try_variant_get(
-                v, f"$.source.{f.name}", f.dataType.simpleString()
-            ).alias(f.name)
-            for f in _SOURCE_SCHEMA.fields
-        ]
-    )
-    return F.struct(
-        payload("$.before").alias("before"),
-        payload("$.after").alias("after"),
-        source.alias("source"),
-        F.try_variant_get(v, "$.op", "string").alias("op"),
-        F.try_variant_get(v, "$.ts_ms", "long").alias("ts_ms"),
-    )
-
-
 def parse_debezium_json(
     raw: DataFrame,
     value_col: str = "value",
     mode: str = "upsert",
     payload_schema: T.StructType = EVENT_PAYLOAD_SCHEMA,
-    engine: str = "auto",
 ) -> DataFrame:
     """Debezium JSON -> typed changelog rows (the deserializer).
 
@@ -455,29 +385,15 @@ def parse_debezium_json(
     '-D'). Reference: RowDataDebeziumDeserializeSchema.java:118-158;
     DebeziumChangelogMode.java.
 
-    ``engine``: ``'auto'`` (default) resolves to the Jackson
-    ``from_json`` — measured FASTER than the VARIANT path at every
-    extraction width on this build, because Catalyst prunes the
-    from_json schema to the consumed fields while per-field variant
-    gets pay a traversal each (numbers in the _VARIANT_SAFE_TYPES
-    comment). ``'variant'`` forces the ``_variant_envelope`` path
-    (flat atomic payloads only; raises otherwise) — kept for
-    narrow-extraction experiments, A/B-pinned value-identical to
-    Jackson on the fixture wires; ``'jackson'`` forces from_json.
+    The decode is one Jackson ``from_json`` of the whole envelope
+    (``value_col`` must be a plain identifier).
     """
+    value_col = _ident(value_col, "value_col")
     if mode not in ("upsert", "all"):
         raise ValueError(f"mode must be 'upsert' or 'all', got {mode!r}")
-    if engine not in ("auto", "jackson", "variant"):
-        raise ValueError(f"engine must be auto/jackson/variant, got {engine!r}")
     overlap = set(f.name for f in payload_schema.fields) & set(METADATA_COLUMNS)
     if overlap:
         raise ValueError(f"payload fields collide with metadata columns: {sorted(overlap)}")
-    if engine == "variant" and not _variant_safe(payload_schema):
-        raise ValueError(
-            "engine='variant' supports flat atomic payload schemas only; "
-            "use engine='auto' to fall back to from_json"
-        )
-    use_variant = engine == "variant"
     # ONE full-schema parse materialized as a struct column, shared by
     # every downstream field access (whole-stage codegen evaluates it
     # once per row — the BASELINE round-6 CSE measurement). Deliberately
@@ -498,24 +414,19 @@ def parse_debezium_json(
     # (the envelope DDL string parses to the same StructType the
     # make_envelope_schema object carried) — this decoder fronts a dozen
     # tier-A keys at ~60 Column-API gateway calls each before.
-    if use_variant:
-        # the parse lives in its OWN projection (see _variant_envelope:
-        # CollapseProject keeps it separate, so the record parses once
-        # and the typed gets traverse the materialized variant binary)
-        staged = raw.select(F.try_parse_json(F.col(value_col)).alias("__v"))
-        parsed = staged.select(
-            _variant_envelope(F.col("__v"), payload_schema).alias("e")
-        ).filter(F.col("e.op") != HEARTBEAT_OP)
-    else:
-        p = _payload_ddl(payload_schema)
-        env_ddl = (
-            f"before {p}, after {p},"
-            " source struct<db:string,table:string,ts_ms:bigint,"
-            "file:string,pos:bigint>, op string, ts_ms bigint"
-        )
-        parsed = raw.selectExpr(
-            f"from_json({_safe(value_col, 'value_col')}, '{env_ddl}') AS e"
-        ).filter(f"e.op <> '{HEARTBEAT_OP}'")
+    #
+    # Jackson is the only decoder: a VARIANT decode (try_parse_json + a
+    # typed try_variant_get per field) measured slower at every extraction
+    # width (sf10, 13-field envelope: 8.2-9.5 s vs 4.1-5.1 s).
+    p = _payload_ddl(payload_schema)
+    env_ddl = (
+        f"before {p}, after {p},"
+        " source struct<db:string,table:string,ts_ms:bigint,"
+        "file:string,pos:bigint>, op string, ts_ms bigint"
+    )
+    parsed = raw.selectExpr(
+        f"from_json({value_col}, '{env_ddl}') AS e"
+    ).filter(f"e.op <> '{HEARTBEAT_OP}'")
     if mode == "upsert":
         kind_rows = (
             "array(struct("
@@ -547,17 +458,11 @@ def parse_debezium_json(
     return out.drop("row_kind") if mode == "upsert" else out
 
 
-# Persist strategy for the multi-table route cache — the round-9 A/B knob
-# (see the cache branch below). Values: "cache" (winner) | "checkpoint".
-_MULTI_PERSIST = "cache"
-
-
 def parse_debezium_json_multi(
     raw: DataFrame,
     schemas: dict[tuple[str, str], T.StructType],
     value_col: str = "value",
     mode: str = "upsert",
-    cache: bool = False,
 ) -> dict[tuple[str, str], DataFrame]:
     """Route a MIXED multi-table envelope stream and decode each table with
     its own payload schema.
@@ -574,12 +479,14 @@ def parse_debezium_json_multi(
     Unknown tables are ignored, exactly like rows outside the
     captured-table list.
 
-    ``cache=True`` persists the route-keyed stream so N table consumers
-    read the (possibly expensive to produce) input once — the multi-sink
-    fan-out pattern; in production the changelog is already materialized in
-    the log/topic, making this a no-op.
+    The route-keyed stream is cached so N table consumers read the
+    (possibly expensive to produce) input once — the multi-sink fan-out
+    pattern; in production the changelog is already materialized in the
+    log/topic, making this a no-op. (A/B'd against
+    ``localCheckpoint(eager=True)`` on the 25M-record route: the two were
+    indistinguishable, BASELINE.md round-9 codec experiment.)
     """
-    value_col = _safe(value_col, "value_col")
+    value_col = _ident(value_col, "value_col")
     routed = raw.selectExpr(
         value_col,
         f"from_json({value_col},"
@@ -588,20 +495,7 @@ def parse_debezium_json_multi(
         value_col,
         "__route.source.db AS __route_db",
         "__route.source.table AS __route_tb",
-    )
-    if cache:
-        # cache() vs localCheckpoint(eager): A/B'd on the 25M-record route
-        # at the 100x point (BASELINE.md round-9 codec experiment) —
-        # indistinguishable (mins 37.2 s vs 38.3 s across two interleaved
-        # sessions; run-to-run noise >> the delta). cache() stays the
-        # default: same bytes re-read by both consumers either way, and in
-        # production the changelog is already materialized in the
-        # log/topic, making this persist a no-op. _MULTI_PERSIST keeps the
-        # experiment re-runnable.
-        if _MULTI_PERSIST == "checkpoint":
-            routed = routed.localCheckpoint(eager=True)
-        else:
-            routed = routed.cache()
+    ).cache()
     return {
         (db, tb): parse_debezium_json(
             routed.filter(

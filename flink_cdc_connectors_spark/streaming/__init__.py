@@ -8,7 +8,6 @@ from flink_cdc_connectors_spark.streaming.dedup import (
 )
 from flink_cdc_connectors_spark.streaming.changelog import (
     read_changelog_stream,
-    stream_changelog_from_events,
     materialize_latest_state,
     read_latest_state,
     windowed_agg_stream,
@@ -19,7 +18,6 @@ __all__ = [
     "stream_dedup_exact",
     "stream_dedup_minhash_bands",
     "read_changelog_stream",
-    "stream_changelog_from_events",
     "materialize_latest_state",
     "read_latest_state",
     "windowed_agg_stream",

@@ -11,11 +11,12 @@ so the engine's contract is:
   over the store are retract-correct by construction
   (normalize-then-aggregate, SURVEY.md §4).
 
-Two materialization strategies (``materialize_latest_state``): the DEFAULT
-routes through ``stateful.streaming_changelog_normalize``
-(applyInPandasWithState — row-level incremental state, O(changed keys) per
-epoch, appended to an update log); the ``rewrite`` fallback is the
-format-agnostic foreachBatch full-store MERGE (O(state) per epoch).
+Materialization (``materialize_latest_state``) runs one path:
+``stateful.streaming_changelog_normalize`` (applyInPandasWithState —
+row-level incremental state, O(changed keys) per epoch) appended to an
+update log. Reads and compaction resolve that log to latest-per-key with
+``operators.cdc.changelog_normalize``, the single home of the offset-order
+rule.
 
 The streaming source is file-based Debezium-envelope JSON — the exact wire
 shape of the reference's JsonDebeziumDeserializationSchema
@@ -26,13 +27,18 @@ any real Debezium topic/file dump plugs in unchanged.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_cdc_connectors_spark.operators.cdc import changelog_normalize
 from flink_cdc_connectors_spark.sources.envelope import (
-    DEBEZIUM_ENVELOPE_SCHEMA,
+    METADATA_COLUMNS,
     parse_debezium_json,
+)
+from flink_cdc_connectors_spark.streaming.stateful import (
+    streaming_changelog_normalize,
 )
 
 
@@ -58,66 +64,6 @@ def read_changelog_stream(
     return parse_debezium_json(raw, value_col="value")
 
 
-def stream_changelog_from_events(
-    spark: SparkSession, events_json_dir: str, **kwargs
-) -> DataFrame:
-    """Alias with the fixture-centric name used by tests."""
-    return read_changelog_stream(spark, events_json_dir, **kwargs)
-
-
-def _merge_latest_state(
-    batch_df: DataFrame, state_dir: str, key_cols: list[str]
-) -> None:
-    """MERGE one micro-batch of changelog rows into the latest-state store.
-
-    The upsert contract of the reference's sinks (insert/update replace by
-    PK, delete removes — RecordUtils.upsertBinlog:77-114 applied
-    continuously). Without a transactional table format in this container,
-    the store is a parquet directory rewritten per epoch:
-
-        new_state = normalize( current_state(as inserts)  UNION  batch )
-
-    With Delta/Iceberg available this becomes ``MERGE INTO`` keyed on the
-    PK — same semantics, row-level instead of rewrite. The rewrite is
-    correct (idempotent per epoch, resumable from checkpoint) and the
-    normalize is one hash shuffle on the key.
-
-    Delete events are kept in the store as TOMBSTONES (op='delete') rather
-    than removed: micro-batches need not respect offset order across keys
-    (the file source may deliver a stale event after the delete that
-    supersedes it), and with tombstones retained the merge is fully
-    order-independent — the offset comparison decides the winner no matter
-    the arrival order. ``read_latest_state`` filters them out. This is
-    exactly Kafka log-compaction semantics; a production store compacts
-    tombstones once the source offset passes them.
-    """
-    spark = batch_df.sparkSession
-    batch_cols = batch_df.columns
-    if os.path.isdir(state_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
-        current = spark.read.parquet(state_dir)
-    else:
-        current = spark.createDataFrame([], batch_df.schema)
-    merged = current.select(*batch_cols).unionByName(batch_df)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    new_state = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # Rewrite atomically enough for a local store: write tmp, swap.
-    tmp = state_dir.rstrip("/") + ".tmp"
-    new_state.write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    if os.path.isdir(state_dir):
-        shutil.rmtree(state_dir)
-    os.replace(tmp, state_dir)
-
-
 def _append_state_updates(batch_df: DataFrame, state_dir: str) -> None:
     """Append one micro-batch of per-key state UPDATES to the store.
 
@@ -136,55 +82,32 @@ def materialize_latest_state(
     checkpoint_dir: str,
     key_cols: list[str] = ("user_id",),
     available_now: bool = True,
-    strategy: str = "stateful",
 ):
     """Run the stream -> latest-state materialization. Returns the
     StreamingQuery; with ``available_now`` the query drains all
     currently-visible input and stops.
 
-    ``strategy='stateful'`` (default): ChangelogNormalize via
-    ``applyInPandasWithState`` — per-key row-level state in Spark's state
-    store (the reference's keyed state backend), update-mode emissions
-    appended to an update log. Per-epoch write cost is O(changed keys).
-
-    ``strategy='rewrite'``: the foreachBatch full-store MERGE fallback —
-    normalize(store ∪ batch) rewritten per epoch. Correct and
-    format-agnostic, but O(state) per epoch; use when the payload schema
-    can't be expressed as a fixed state StructType (e.g. nested MAP state)
-    or to materialize directly into a plain one-row-per-key table.
+    ChangelogNormalize via ``applyInPandasWithState`` — per-key row-level
+    state in Spark's state store (the reference's keyed state backend),
+    update-mode emissions appended to an update log. Per-epoch write cost
+    is O(changed keys).
     """
-    if strategy == "rewrite":
-        writer = (
-            changelog_stream.writeStream.outputMode("append")
-            .foreachBatch(
-                lambda df, epoch: _merge_latest_state(df, state_dir, list(key_cols))
-            )
-            .option("checkpointLocation", checkpoint_dir)
-        )
-    elif strategy == "stateful":
-        if len(tuple(key_cols)) != 1:
-            raise ValueError("stateful strategy keys state by a single column")
-        from flink_cdc_connectors_spark.sources.envelope import METADATA_COLUMNS
-        from flink_cdc_connectors_spark.streaming.stateful import (
-            streaming_changelog_normalize,
-        )
-
-        key = tuple(key_cols)[0]
-        payload = [
-            f
-            for f in changelog_stream.schema.fields
-            if f.name not in METADATA_COLUMNS and f.name != key
-        ]
-        normalized = streaming_changelog_normalize(
-            changelog_stream, key_col=key, payload_fields=payload
-        )
-        writer = (
-            normalized.writeStream.outputMode("update")
-            .foreachBatch(lambda df, epoch: _append_state_updates(df, state_dir))
-            .option("checkpointLocation", checkpoint_dir)
-        )
-    else:
-        raise ValueError(f"strategy must be 'stateful' or 'rewrite', got {strategy!r}")
+    if len(tuple(key_cols)) != 1:
+        raise ValueError("latest state is keyed by a single column")
+    key = tuple(key_cols)[0]
+    payload = [
+        f
+        for f in changelog_stream.schema.fields
+        if f.name not in METADATA_COLUMNS and f.name != key
+    ]
+    normalized = streaming_changelog_normalize(
+        changelog_stream, key_col=key, payload_fields=payload
+    )
+    writer = (
+        normalized.writeStream.outputMode("update")
+        .foreachBatch(lambda df, epoch: _append_state_updates(df, state_dir))
+        .option("checkpointLocation", checkpoint_dir)
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
@@ -196,19 +119,9 @@ def read_latest_state(
     """Query view over the materialized store: latest row per key, live
     rows only (tombstones filtered) — the upsert-sink read contract.
 
-    Handles both store layouts: the stateful update LOG (several updates
-    per key across epochs — resolve by max offset) and the rewrite store
-    (already one row per key — the window is a no-op)."""
-    state = spark.read.parquet(state_dir)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        state.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    return latest.filter(F.col("op") != "delete")
+    The store is an update LOG (several updates per key across epochs);
+    ``changelog_normalize`` resolves it by max offset."""
+    return changelog_normalize(spark.read.parquet(state_dir), key_cols)
 
 
 def compact_tombstones(
@@ -229,14 +142,7 @@ def compact_tombstones(
     the number of tombstone ROWS removed."""
     state = spark.read.parquet(state_dir)
     n_before = state.filter(F.col("op") == "delete").count()
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        state.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = changelog_normalize(state, key_cols, drop_deletes=False)
     kept = latest.filter(
         (F.col("op") != "delete") | (F.col("event_id") > safe_offset)
     )
@@ -245,8 +151,6 @@ def compact_tombstones(
     if removed:
         tmp = state_dir.rstrip("/") + ".compact"
         kept.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         shutil.rmtree(state_dir)
         os.replace(tmp, state_dir)
     return removed

@@ -4,10 +4,9 @@
 Spark stateful operator: per-key state in the state store holds the
 latest-by-offset event; every micro-batch emits the keys whose state
 changed (update semantics — exactly what the reference's upsert sinks
-consume). Unlike the foreachBatch rewrite in ``changelog.py`` (which
-rewrites the whole store per epoch), state here is row-level and
-incremental — the Structured Streaming analog of Flink's keyed state
-backend — and is the DEFAULT path of ``materialize_latest_state``.
+consume). State here is row-level and incremental — the Structured
+Streaming analog of Flink's keyed state backend — and this operator is
+the only path of ``materialize_latest_state``.
 
 The operator is schema-parameterized: state/output StructTypes are built
 from the captured table's payload schema (the reference builds one
@@ -43,26 +42,6 @@ _DEFAULT_PAYLOAD = [
     StructField("value", DoubleType()),
     StructField("props", StringType()),
 ]
-
-# Back-compat exports (the original fixed-schema form).
-STATE_SCHEMA = StructType(
-    [
-        StructField("ts_ms", LongType()),
-        StructField("event_id", LongType()),
-        StructField("op", StringType()),
-        *_DEFAULT_PAYLOAD,
-    ]
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("op", StringType()),
-        *_DEFAULT_PAYLOAD,
-        StructField("ts_ms", LongType()),
-        StructField("event_id", LongType()),
-    ]
-)
 
 
 def _to_py(value: Any, dtype: DataType) -> Any:
@@ -176,12 +155,6 @@ def streaming_changelog_normalize(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-# Back-compat alias: the original module-level function name.
-def _normalize_fn(key, pdfs, state):
-    fn, _, _ = make_changelog_normalize()
-    return fn(key, pdfs, state)
 
 
 # ---------------------------------------------------------------------------

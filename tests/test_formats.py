@@ -2,8 +2,17 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from flink_cdc_connectors_spark.sources.envelope import (
+    EVENT_PAYLOAD_SCHEMA,
+    _payload_ddl,
+    events_to_debezium_json,
+    parse_debezium_json,
+    parse_debezium_json_multi,
+)
 from flink_cdc_connectors_spark.sources.formats import (
     events_to_canal_json,
     events_to_changelog_json,
@@ -150,10 +159,7 @@ def _charset_events(spark):
     )
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
+@pytest.mark.parametrize(
     "codec", ["debezium", "changelog", "canal", "maxwell", "ogg"]
 )
 def test_charset_round_trip(spark, codec):
@@ -205,49 +211,78 @@ def test_charset_wire_bytes_are_valid_utf8_json(spark):
         assert payload["props"] in CHARSET_PROPS
 
 
-def test_debezium_decode_engines_are_value_identical(spark, sf_dir):
-    """The VARIANT decode path must be indistinguishable from the Jackson
-    from_json path on the fixture wires — every row, both changelog
-    modes, heartbeats included. engine='auto' resolves to Jackson
-    unconditionally (the measured default — see envelope.py's VARIANT
-    post-mortem); this test pins the EXPLICITLY-selected variant engine
-    value-identical so the alternative stays a safe swap if the
-    measurement ever flips."""
-    from flink_cdc_connectors_spark.sources.envelope import (
-        events_to_debezium_json,
-        heartbeat_envelopes,
-        parse_debezium_json,
-    )
-    from flink_cdc_connectors_spark.sources.loaders import load_table
+_NESTED_BAD = T.StructType(
+    [T.StructField("n", T.ArrayType(T.StructType([T.StructField("it's", T.LongType())])))]
+)
 
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        T.StructType([T.StructField("a`b", T.LongType())]),
+        T.StructType([T.StructField("a'b", T.LongType())]),
+        T.StructType([T.StructField("a\\b", T.LongType())]),
+        _NESTED_BAD,
+    ],
+    ids=["backtick", "quote", "backslash", "nested"],
+)
+def test_payload_ddl_rejects_literal_breaking_names(schema):
+    """The payload DDL is embedded in a single-quoted from_json literal, so
+    a field name at any depth that could close the quote, escape it or
+    close the identifier quoting is refused before any SQL is built."""
+    with pytest.raises(ValueError, match="payload field"):
+        _payload_ddl(schema)
+
+
+def test_payload_ddl_guard_runs_on_the_decode_path(spark):
+    raw = spark.createDataFrame([("{}",)], "value string")
+    with pytest.raises(ValueError, match="payload field"):
+        parse_debezium_json(raw, payload_schema=_NESTED_BAD)
+
+
+def test_nested_payload_names_are_quoted(spark):
+    """Nested field names are backtick-quoted in the DDL: a nested name
+    with a space or a SQL keyword decodes instead of failing to parse."""
+    inner = T.StructType(
+        [T.StructField("x y", T.LongType()), T.StructField("select", T.LongType())]
+    )
+    schema = T.StructType(
+        [T.StructField("user_id", T.LongType()), T.StructField("n", inner)]
+    )
+    wire = (
+        '{"before":null,"after":{"user_id":1,"n":{"x y":5,"select":6}},'
+        '"source":{"db":"app","table":"t","ts_ms":0,"file":"f","pos":1},'
+        '"op":"c","ts_ms":0}'
+    )
+    raw = spark.createDataFrame([(wire,)], "value string")
+    row = parse_debezium_json(raw, payload_schema=schema).first()
+    assert (row["user_id"], row["n"]["x y"], row["n"]["select"]) == (1, 5, 6)
+
+
+_DECODERS = {
+    "debezium": parse_debezium_json,
+    "debezium_multi": lambda raw, value_col: parse_debezium_json_multi(
+        raw, {("app", "events"): EVENT_PAYLOAD_SCHEMA}, value_col
+    ),
+    "changelog": parse_changelog_json,
+    "canal": parse_canal_json,
+    "maxwell": parse_maxwell_json,
+    "ogg": parse_ogg_json,
+}
+
+
+@pytest.mark.parametrize("decoder", sorted(_DECODERS))
+@pytest.mark.parametrize("value_col", ["my-col", "a.b"])
+def test_value_col_must_be_a_plain_identifier(spark, decoder, value_col):
+    """``value_col`` is interpolated bare into SQL: `my-col` would parse as
+    a subtraction and `a.b` as a struct access, so both are refused."""
+    raw = spark.createDataFrame([("{}",)], "value string")
+    with pytest.raises(ValueError, match="value_col"):
+        _DECODERS[decoder](raw, value_col=value_col)
+
+
+def test_value_col_accepts_a_plain_identifier(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
-    raw = events_to_debezium_json(e).unionByName(heartbeat_envelopes(e, 3_600_000))
-    for mode in ("upsert", "all"):
-        a = parse_debezium_json(raw, mode=mode, engine="jackson")
-        b = parse_debezium_json(raw, mode=mode, engine="variant")
-        assert a.schema == b.schema
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_debezium_variant_engine_rejects_unsafe_payloads():
-    """engine='variant' must refuse payload schemas outside the pinned
-    atomic-safe set (decimal coercion differs between the decoders);
-    engine='auto' silently takes the Jackson path for them instead."""
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    from flink_cdc_connectors_spark.sources.envelope import _variant_safe
-
-    dec = T.StructType([T.StructField("d", T.DecimalType(10, 2))])
-    assert not _variant_safe(dec)
-    nested = T.StructType(
-        [T.StructField("m", T.StructType([T.StructField("x", T.LongType())]))]
-    )
-    assert not _variant_safe(nested)
-    from flink_cdc_connectors_spark.sources.envelope import parse_debezium_json
-
-    class _FakeDF:  # never reached: validation precedes any plan building
-        pass
-
-    with _pytest.raises(ValueError, match="variant"):
-        parse_debezium_json(_FakeDF(), payload_schema=dec, engine="variant")
+    wire = events_to_debezium_json(e).withColumnRenamed("value", "_wire_2")
+    got = parse_debezium_json(wire, value_col="_wire_2")
+    assert got.count() == wire.count() > 0

@@ -14,6 +14,8 @@ import pytest
 from flink_cdc_connectors_spark.sources.jdbc import walk_chunk_boundaries
 from flink_cdc_connectors_spark.sources.jdbc_live import (
     derby_execute,
+    derby_shutdown,
+    derby_update,
     derby_url,
     min_max_live,
     mirror_to_derby,
@@ -83,6 +85,22 @@ def test_mirror_is_idempotent(spark, seeded):
     assert os.path.getmtime(os.path.join(DB, "seg0")) == before
     # still all rows present
     assert derby_execute(spark, derby_url(DB))('SELECT COUNT(*) FROM "CUSTOMER"') == n
+
+
+def test_update_runner_reconnects_after_shutdown(spark):
+    """A ``derby_update`` runner outlives ``derby_shutdown``: the shutdown
+    closes its cached connection, and the next ``run`` reopens it (which
+    reboots the database) instead of failing on the closed one."""
+    db = os.path.join(os.path.dirname(DB), "update_db")
+    derby_shutdown(spark, db)
+    shutil.rmtree(db, ignore_errors=True)
+    run = derby_update(spark, derby_url(db, create=True))
+    run('CREATE TABLE "T" ("k" INT)')
+    assert run('INSERT INTO "T" VALUES (1), (2)') == 2
+    derby_shutdown(spark, db)
+    assert run('INSERT INTO "T" VALUES (3)') == 1
+    assert derby_execute(spark, derby_url(db))('SELECT COUNT(*) FROM "T"') == 3
+    derby_shutdown(spark, db)
 
 
 def test_incremental_capture_order_and_counts(spark, sf_dir):

@@ -4,8 +4,8 @@ The reference's workhorse test (MySqlConnectorITCase.java:215-275) applies
 live INSERT/UPDATE/DELETE and asserts the materialized sink equals the
 expected final state. Here: fixture events -> Debezium-envelope JSON files
 (the exact JsonDebeziumDeserializationSchema wire shape) -> file stream ->
-foreachBatch MERGE -> assert the state store equals the batch
-changelog_normalize over the same log.
+stateful normalize into the update-log store -> assert the store's latest
+state equals the batch changelog_normalize over the same log.
 """
 
 from __future__ import annotations
@@ -39,16 +39,15 @@ def envelope_dir(spark, sf_dir, tmp_path_factory):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["stateful", "rewrite"])
+# the id names the (single, stateful) materialization path
+@pytest.mark.parametrize("path", ["stateful"])
 def test_stream_materialize_equals_batch_normalize(
-    spark, sf_dir, envelope_dir, tmp_path, strategy
+    spark, sf_dir, envelope_dir, tmp_path, path
 ):
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
     stream = read_changelog_stream(spark, envelope_dir, max_files_per_trigger=1)
-    q = materialize_latest_state(
-        stream, state_dir, ckpt, available_now=True, strategy=strategy
-    )
+    q = materialize_latest_state(stream, state_dir, ckpt, available_now=True)
     q.awaitTermination(300)
 
     got = (
@@ -71,9 +70,9 @@ def test_stream_materialize_equals_batch_normalize(
     assert (got["value_r"] - want["value_r"]).abs().max() < 1e-9
 
 
-@pytest.mark.parametrize("strategy", ["stateful", "rewrite"])
+@pytest.mark.parametrize("path", ["stateful"])
 def test_stream_materialize_is_incremental_and_resumable(
-    spark, sf_dir, envelope_dir, tmp_path, strategy
+    spark, sf_dir, envelope_dir, tmp_path, path
 ):
     """Restarting from the checkpoint must not change the final state
     (exactly-once restore — the DebeziumOffset/dedup contract)."""
@@ -81,13 +80,13 @@ def test_stream_materialize_is_incremental_and_resumable(
     ckpt = str(tmp_path / "ckpt")
     stream = read_changelog_stream(spark, envelope_dir, max_files_per_trigger=2)
     materialize_latest_state(
-        stream, state_dir, ckpt, available_now=True, strategy=strategy
+        stream, state_dir, ckpt, available_now=True
     ).awaitTermination(300)
     n1 = read_latest_state(spark, state_dir).count()
     # resume with the same checkpoint: no new input -> state unchanged
     stream2 = read_changelog_stream(spark, envelope_dir)
     materialize_latest_state(
-        stream2, state_dir, ckpt, available_now=True, strategy=strategy
+        stream2, state_dir, ckpt, available_now=True
     ).awaitTermination(300)
     n2 = read_latest_state(spark, state_dir).count()
     assert n1 == n2
